@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.QuestionParser
 import graft.operators.{Frontier, Politeness, SeenSet}
-import graft.plans.SnapshotTable
+import graft.plans.{BucketedTable, SnapshotTable}
 import graft.sources.PagesGen
 
 /** The wave-loop crawl engine (SURVEY §2.8 P5, §3.1, §4 hot path).
@@ -16,7 +17,7 @@ import graft.sources.PagesGen
   *   frontier ──dedup flag (bloom → confirm)──┐
   *                                            ├─▶ waveLog(disp ∈ seen |
   *   robots ⋈ (broadcast) ── budget rank ─────┘    blocked | deferred | fetch)
-  *   fetch slice ⋈ pages (broadcast the wave — pages NEVER shuffle)
+  *   fetch slice ⋈ bucketed pages (sort-merge — pages NEVER shuffle)
   *     ──parse once──▶ questions ⊕ discovered links
   *   commits: fetchlog (doubles as the seen log + lineage source),
   *            questions, frontier' — atomic manifest renames → resumable.
@@ -30,16 +31,15 @@ import graft.sources.PagesGen
   * and digests at any parallelism (CrawlEngineSpec asserts local[8]-profile
   * vs local[32]-profile equality; Bench runs the real two-master protocol).
   *
-  * Scale notes (100 TB / 10^10 urls): pages NEVER shuffle. Preferred shape:
-  * a BUCKETED pages table (cfg.pagesTable, plans/BucketedTable) — sort-merge
-  * fetch join with zero exchange/sort on the pages side, only the small wave
-  * shuffles into the bucket layout. Fallback: broadcast the wave (inner join
-  * + left-anti error recovery — build-left on LEFT OUTER is illegal and
-  * silently drops the hint). The bloom tier is built distributed (executors
-  * fold partial filters; driver sees only the sketch). Dedup shuffles only
-  * bloom-suspects. Politeness ranks via salted two-phase top-k (hot-host
-  * skew, P8). All state tables are wave-partitioned for pruning. The
-  * frontier itself is a dir-granular LSM priority queue
+  * Scale notes (100 TB / 10^10 urls): pages NEVER shuffle. The pages corpus
+  * is always a BUCKETED table (cfg.pagesTable, or one staged under the store
+  * — plans/BucketedTable): sort-merge fetch join with zero exchange/sort on
+  * the pages side, only the small wave shuffles into the bucket layout. The
+  * bloom tier is built distributed (executors fold partial filters; driver
+  * sees only the sketch). Dedup shuffles only bloom-suspects. Politeness
+  * ranks via salted two-phase top-k (hot-host skew, P8). All state tables
+  * are wave-partitioned for pruning. The frontier itself is a dir-granular
+  * LSM priority queue
   * ([[graft.operators.Frontier]]): a wave reads fresh discoveries plus the
   * priority bands that can win a politeness slot, rewrites exactly what it
   * read, and carries the provably-deferred cold tail forward at the
@@ -49,7 +49,6 @@ object CrawlEngine {
 
   final case class Config(
       waveDurationMs: Long = 60000L,
-      saltBuckets: Int = 16,
       // SIZING RULE: shards caps the confirm tier's parallelism (the insert/
       // probe cogroup runs ≤ shards tasks) AND divides the state for pruned
       // I/O — set shards ≈ cores at bench scale; at 10^10 set it ≥
@@ -66,13 +65,7 @@ object CrawlEngine {
       // exceed this; below it the extra distinct-shards planning job costs
       // more than reading everything
       cuckooPruneBytes: Long = SeenSet.DefaultPruneBytes,
-      // LSM compaction: a wave's inserts append as exact per-shard delta
-      // blobs (O(wave) write, zero read); a shard folds its deltas into its
-      // base cuckoo chain when it holds this many blobs. Probe cost per
-      // suspect ≤ 1 chain check + (threshold-1) binary searches.
-      cuckooCompactThreshold: Int = SeenSet.DefaultCompactThreshold,
       bloomExpected: Long = 1L << 22,
-      bloomFpp: Double = 0.01,
       // DEFAULT = BloomShardExact: EXACT confirm (reference dupefilter
       // semantics — a never-seen URL is NEVER dropped) over the LSM shard
       // store, so insert I/O is O(wave) and probes read only suspect
@@ -94,44 +87,25 @@ object CrawlEngine {
       maxWaves: Int = 64,
       parseQuestions: Boolean = true,
       amplify: Int = 1,
-      // wave rows broadcast-able for the fetch join. ~100 B/row → ~400 MB at
-      // the limit: a large but legal explicit broadcast, and RADICALLY
-      // cheaper than the alternative (hash-exchanging every html row of the
-      // pages table each wave — the 100-TB scale-killer). Waves beyond this
-      // take the shuffle join. Irrelevant when `pagesTable` is set.
-      // DRIVER-MEMORY CONTRACT (ADVICE r02): a wave at the limit holds
-      // ~400 MB on the driver, and the error-recovery anti-join can add a
-      // second ≤wave-sized broadcast in the same wave — budget ≥ 2× the
-      // limit's bytes of driver heap headroom. build.sbt pins -Xmx16g
-      // (SPARK_DRIVER_MEM overrides); lower heaps should lower this limit
-      // proportionally (rows × ~100 B × 2 ≤ heap/4 is a safe rule).
-      broadcastWaveLimit: Long = 4000000L,
-      pagesPath: Option[String] = None,
       // a catalog-registered BUCKETED pages table (bucketBy url, sorted, one
-      // file per bucket — see Bench.stagePagesBucketed): the fetch join then
-      // needs NO pages exchange, NO pages sort, and NO wave broadcast — only
-      // the (small) wave side shuffles, into the bucket layout. This is the
-      // 10^10-scale join shape (the north star's Iceberg-table analog).
+      // file per bucket, staged with BucketedTable.write — Bench and
+      // perfbench stage one and register it in each session, and it may
+      // live anywhere via the table's LOCATION): the fetch join then needs
+      // NO pages exchange and NO pages sort — only the (small) wave side
+      // shuffles, into the bucket layout. This is the 10^10-scale join
+      // shape (the north star's Iceberg-table analog). Unset, run() stages
+      // the generated corpus the same way under $storeRoot/pages once.
       // TABLE CONTRACT: urls must be UNIQUE (one page per url) — the fetch
       // join is INNER on url, so a duplicate url would double-fetch AND can
       // defeat the nOk==nFetch error-recovery short-circuit (ADVICE r02).
       // BucketedTable.write asserts this at staging time; rows with NULL
       // html are tolerated (routed to status='error', never parsed).
       pagesTable: Option[String] = None,
-      // one-time duplicate-url check when ATTACHING an externally staged
-      // plain-parquet pages dir (pagesPath): the bucketed path asserts at
-      // staging and the engine-generated path is unique by construction,
-      // but an external dir reaches the nOk==nFetch short-circuit unchecked
-      // without this (VERDICT r03 missing #3). One column-pruned agg at
-      // startup; opt out only for corpora already checked upstream.
-      assertPagesUnique: Boolean = true,
       // frontier LSM layout (operators/Frontier): cold dirs are keyed
       // ((band·slices + tsSlice)·chunks + rankChunk)·shards + hostBucket;
       // fresh discoveries live in shard -1. At 10^10 size shards ≈ the
-      // cluster's task fan-out and bands to the crawl's depth profile
-      // (band = min(priority, bands-1)).
+      // cluster's task fan-out (band = min(priority, FrontierBands-1)).
       frontierShards: Int = 32,
-      frontierBands: Int = 8,
       // order-aligned slicing WITHIN a band (VERDICT r04 residual: the
       // ACTIVE band was one indivisible slab per host-bucket, rewritten
       // every wave). tsSlice = (discovery_ts epoch-sec / sliceSecs) mod
@@ -155,16 +129,15 @@ object CrawlEngine {
       // monotone, so chunk k's keys sort strictly below chunk k+1's and the
       // stats planner prunes tail chunks with no planner change) into
       // GEOMETRIC tiers: chunk k covers ranks [budget·W·(2^k−1),
-      // budget·W·(2^(k+1)−1)) — LSM leveling, so chunks (16 by default)
-      // cover 65535·W·budget rows per host and a backlog row is rewritten
-      // O(log(backlog)) times total as it migrates toward the head tier,
-      // instead of once per wave. Engaged with the sidecar gate (chunk 0
+      // budget·W·(2^(k+1)−1)), W = FrontierChunkWaves — LSM leveling, so
+      // chunks (16 by default) cover 65535·W·budget rows per host and a
+      // backlog row is rewritten O(log(backlog)) times total as it migrates
+      // toward the head tier, instead of once per wave. Engaged with the sidecar gate (chunk 0
       // below it); the one-time cost is a per-host window over the rows the
       // wave already rewrites — a giant single-host backlog funnels its one
       // ranking sort through one task ONCE per influx, after which waves
       // read only its head tier. frontierRankChunks=1 disables.
       frontierRankChunks: Int = 16,
-      frontierChunkWaves: Int = 4,
       // frontier read pruning + sidecar writes engage once the frontier's
       // manifest bytes pass this (sidecars at half of it, so stats exist by
       // the time pruning starts); below it every dir is read and the
@@ -181,29 +154,43 @@ object CrawlEngine {
       // cogroup, which pays one exchange of the cold bloom state. Identical
       // results on all three plans (FrontierSpec).
       frontierDupBroadcastBytes: Long = Frontier.DupProbeBroadcastBytes,
-      // discovery-count bound for the map-side regime above — same driver-
-      // memory contract as broadcastWaveLimit (~16 B/discovery collected)
+      // discovery-count bound for the map-side regime above (~16 B/discovery
+      // collected on the driver)
       frontierDupDiscRows: Long = 4000000L,
       // sidecar fold threshold (Frontier.compactSidecar): stats/bloom tables
       // rewrite to live-rows-only once they hold this many dirs. Tests lower
       // it to force folds inside short crawls (the crash-replay-across-a-
       // fold repro); the default amortizes the fold to ~1/16 of the live
       // sidecar per wave.
-      frontierSidecarFoldDirs: Int = 16,
-      // in-memory columnar compression for the engine's wave caches
-      // (okParsed / waveLog / staged frontier). Spark's session default is
-      // ON; the crawl is CPU-bound and its cache is wave-scoped (bounded by
-      // the politeness budget, not the corpus), so paying dictionary/RLE
-      // encode+decode per wave buys memory the wave doesn't need — measured
-      // 9-17% whole-crawl cost at bench scale (4M pages @32, 2 interleaved
-      // reps: compressed 146.0/127.1 s vs raw 121.1/118.5 s, digests
-      // identical). OFF by default; opt in on memory-tight executors where
-      // a wave's parsed structs would otherwise spill. Scoped to run() —
-      // the session's prior setting is restored on exit.
-      cacheCompressed: Boolean = false)
+      frontierSidecarFoldDirs: Int = 16)
 
   final case class Result(waves: Int, fetched: Long, deduped: Long,
                           errors: Long, seenCount: Long, seenDigest: Long)
+
+  // bloom pre-filter false-positive rate (per-wave filters and the merged one)
+  private val BloomFpp = 0.01
+  // priority bands of the frontier's cold-dir key
+  private val FrontierBands = 8
+  // W in the geometric rank-chunk widths (Config.frontierRankChunks)
+  private val FrontierChunkWaves = 4
+  // bucket count of the pages table run() stages when Config.pagesTable is
+  // unset — the count Bench and perfbench stage theirs with
+  private val PagesBuckets = 64
+
+  /** Session SQL conf set for the duration of run(), prior values restored:
+    *  - wave-cache columnar compression OFF (okParsed / waveLog / staged
+    *    frontier). The crawl is CPU-bound and its cache is wave-scoped
+    *    (bounded by the politeness budget, not the corpus), so dictionary/
+    *    RLE encode+decode per wave buys memory the wave doesn't need —
+    *    measured 9-17% whole-crawl cost at bench scale (4M pages @32, 2
+    *    interleaved reps: compressed 146.0/127.1 s vs raw 121.1/118.5 s,
+    *    digests identical).
+    *  - sorted bucket scans ON: without it Spark (since 3.0) re-sorts the
+    *    bucketed pages side of the fetch join every wave.
+    */
+  private val RunConf = Map(
+    "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
 
   private def frontierCols = Seq("url", "url_hash", "host", "priority",
     "depth", "discovery_ts", "seed_subject", "seed_year")
@@ -235,45 +222,29 @@ object CrawlEngine {
 
   private val parsePageUdf = udf((html: Array[Byte]) => QuestionParser.parsePage(html))
 
-  /** J5 fetch join, broadcast-legal shape: INNER join with the wave as the
-    * broadcast build side. Build-left on a LEFT OUTER join is unsupported —
-    * Spark silently drops the hint (`HintErrorLogger`) and shuffles pages,
-    * which at 10^10 urls is a full exchange of the big table every wave.
-    * Wave rows with no page are recovered separately by [[errorRows]].
-    * Big waves take the shuffle join instead: pushing 10^5+ rows through a
-    * driver broadcast is the wrong plan at any scale.
-    */
-  private[graft] def joinWavePages(fetchSlice: DataFrame, pages: DataFrame,
-                                   useBroadcast: Boolean): DataFrame = {
-    // html IS NULL rows (legal for external tables) are excluded here so the
-    // parse UDF never sees a null payload; their urls then fall out of the
-    // ok-set and are recovered as status='error' by errorRows (ADVICE r02)
-    val p = pages.select(col("url"), col("warc_ts"), col("html"))
-      .filter(col("html").isNotNull)
-    if (useBroadcast) p.join(broadcast(fetchSlice), Seq("url"), "inner")
-    else fetchSlice.join(p, Seq("url"), "inner")
-  }
-
-  /** Fetch join against a BUCKETED pages table: plain inner join — the
+  /** J5 fetch join against the BUCKETED pages table: plain inner join — the
     * planner gives sort-merge with zero exchange and zero sort on the pages
     * side (bucketed + per-bucket sorted); only the wave shuffles, into the
     * bucket count. No broadcast build (the per-wave ~150 MB wave broadcast
-    * was a measured serial constant on the driver).
+    * was a measured serial constant on the driver). html IS NULL rows are
+    * excluded so the parse UDF never sees a null payload; their urls fall
+    * out of the ok-set and are recovered by [[errorRows]] (ADVICE r02).
     */
   private[graft] def joinWaveBucketed(fetchSlice: DataFrame, pages: DataFrame): DataFrame =
     fetchSlice.join(pages.select(col("url"), col("warc_ts"), col("html"))
       .filter(col("html").isNotNull), Seq("url"), "inner")
 
   /** Wave rows whose url had no page (status='error'): left-anti of the wave
-    * against the fetched urls. The anti side is ≤ the wave (broadcast-sized,
-    * and broadcasting the RIGHT side of a left-anti IS legal), so pages still
-    * never shuffle on the error-recovery path either.
+    * against the fetched urls — both sides wave-sized, pages never read.
     */
-  private[graft] def errorRows(fetchSlice: DataFrame, okUrls: DataFrame,
-                               useBroadcast: Boolean): DataFrame = {
-    val side = if (useBroadcast) broadcast(okUrls) else okUrls
-    fetchSlice.join(side, Seq("url"), "left_anti")
-  }
+  private def errorRows(fetchSlice: DataFrame, okUrls: DataFrame): DataFrame =
+    fetchSlice.join(okUrls, Seq("url"), "left_anti")
+
+  /** Catalog name of the pages table run() stages under `storeRoot` when
+    * Config.pagesTable is unset.
+    */
+  private[graft] def storePagesTable(storeRoot: String): String =
+    s"graft_pages_${Integer.toHexString(new Path(storeRoot, "pages").toString.hashCode)}"
 
   def run(spark: SparkSession, sfDir: String, storeRoot: String,
           cfg: Config = Config()): Result = {
@@ -282,9 +253,9 @@ object CrawlEngine {
     // the shard itself is an int column, so the dim product must fit 2^31
     require(cfg.frontierTsSlices >= 1, "frontierTsSlices must be >= 1")
     require(cfg.frontierRankChunks >= 1, "frontierRankChunks must be >= 1")
-    require(cfg.frontierBands.toLong * cfg.frontierTsSlices *
+    require(FrontierBands.toLong * cfg.frontierTsSlices *
       cfg.frontierRankChunks * cfg.frontierShards < (1L << 31),
-      "frontierBands * frontierTsSlices * frontierRankChunks * " +
+      "FrontierBands * frontierTsSlices * frontierRankChunks * " +
         "frontierShards must stay under 2^31")
 
     val frontierT = new SnapshotTable(spark, storeRoot, "frontier")
@@ -296,29 +267,22 @@ object CrawlEngine {
     val fstatsT = new SnapshotTable(spark, storeRoot, "frontier_stats")
     val fbloomsT = new SnapshotTable(spark, storeRoot, "frontier_blooms")
 
-    // pages staged once (stand-in for the live web / WARC store); an
-    // externally staged path can be shared across runs (Bench does this so
-    // the timed region is pure crawl)
-    val pages = cfg.pagesTable match {
-      case Some(table) => spark.table(table)
-      case None =>
-        val pagesPath = cfg.pagesPath.getOrElse(s"$storeRoot/pages")
-        val pagesFs = new org.apache.hadoop.fs.Path(pagesPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!pagesFs.exists(new org.apache.hadoop.fs.Path(pagesPath, "_SUCCESS")))
-          PagesGen.pages(spark, sfDir, cfg.amplify).toDF()
-            .write.mode(SaveMode.Overwrite).parquet(pagesPath)
-        val df = spark.read.parquet(pagesPath)
-        // an EXTERNAL staged dir (pagesPath given) hasn't been through the
-        // BucketedTable.write staging assert, and the engine-generated dir
-        // is unique by construction — check only the external route
-        if (cfg.pagesPath.isDefined && cfg.assertPagesUnique)
-          graft.plans.BucketedTable.assertUniqueKey(df, "url",
-            s"external pages dir $pagesPath")
-        df
-    }
-    // scan fan-out is a property of the staged files — computed once
-    val pagesScanParts = pages.rdd.getNumPartitions
+    // pages (stand-in for the live web / WARC store): a caller-staged
+    // bucketed table shared across runs (Bench and perfbench, so the timed
+    // region is pure crawl), or the generated corpus staged bucketed under
+    // the store once. The catalog entry is session-scoped and the files are
+    // not, so a resume — possibly in a fresh JVM — re-attaches the dir.
+    val pages = spark.table(cfg.pagesTable.getOrElse {
+      val dir = new Path(storeRoot, "pages")
+      val table = storePagesTable(storeRoot)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(new Path(dir, "_SUCCESS")))
+        BucketedTable.register(spark, dir.toString, table,
+          BucketedTable.PagesDdl, "url", PagesBuckets)
+      else BucketedTable.write(PagesGen.pages(spark, sfDir, cfg.amplify).toDF(),
+        dir.toString, table, "url", PagesBuckets)
+      table
+    })
 
     val robots = Politeness.robotsFixture(spark).toDF()
 
@@ -338,7 +302,7 @@ object CrawlEngine {
       0
     }
     val bloom = SeenSet.Bloom.load(spark, s"$storeRoot/bloom", startWave)
-      .map(_._2).getOrElse(new SeenSet.Bloom(cfg.bloomExpected, cfg.bloomFpp))
+      .map(_._2).getOrElse(new SeenSet.Bloom(cfg.bloomExpected, BloomFpp))
 
     def seenLog(currentWave: Int): DataFrame =
       if (fetchlogT.isEmpty) spark.emptyDataset[Long].toDF("url_hash")
@@ -355,12 +319,10 @@ object CrawlEngine {
     val commitPool = java.util.concurrent.Executors.newFixedThreadPool(5,
       (r: Runnable) => { val t = new Thread(r, "graft-commit"); t.setDaemon(true); t })
     val commitEc = scala.concurrent.ExecutionContext.fromExecutorService(commitPool)
-    // wave-cache columnar compression (see Config.cacheCompressed): runtime
-    // SQL conf, read when each InMemoryRelation is built — set for the run,
-    // prior session value restored in the finally
-    val ccKey = "spark.sql.inMemoryColumnarStorage.compressed"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, cfg.cacheCompressed.toString)
+    // runtime SQL conf (see RunConf), read when each plan or
+    // InMemoryRelation is built — set for the run, restored in the finally
+    val confPrev = RunConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    RunConf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
     while (!done && wave < cfg.maxWaves) {
       val tw0 = System.nanoTime()
@@ -431,352 +393,311 @@ object CrawlEngine {
         }
 
         // ---- politeness (J6, O6, P1-P3): rank open rows, tag dispositions ----
-        // Disposition tallies: in the bucketed-table shape they ride the
-        // parse job as CollectMetrics (observe) — no separate count job (the
-        // measured ~3 s/wave "rank+count" floor item, VERDICT r02 #3). The
-        // broadcast shape still counts eagerly: nFetch must gate the join
-        // choice BEFORE the join is planned.
-        val deferCounts = cfg.pagesTable.isDefined
+        // Disposition tallies ride the parse job as CollectMetrics (observe)
+        // — no separate count job (the measured ~3 s/wave "rank+count" floor
+        // item, VERDICT r02 #3).
         val obs = org.apache.spark.sql.Observation(
           s"graft-wave-$wave-${System.nanoTime()}")
         // timed apart: disposition's localCheckpoint is an EAGER job (it
         // materializes the scan+flag+robots subtree before the parse phase
         // starts) — the wave's main un-overlapped pre-parse cost
         val waveLogBase = phase("disposition", System.nanoTime()) {
-          Politeness.disposition(flagged, robots,
-            cfg.waveDurationMs, cfg.saltBuckets)
+          Politeness.disposition(flagged, robots, cfg.waveDurationMs)
         }
-        val waveLog = (if (!deferCounts) waveLogBase
-          else waveLogBase.observe(obs,
-            count(lit(1)).as("cand"),
-            sum(when(col("disp") === "seen", 1L).otherwise(0L)).as("seen"),
-            sum(when(col("disp") === "blocked", 1L).otherwise(0L)).as("blocked"),
-            sum(when(col("disp") === "deferred", 1L).otherwise(0L)).as("deferred"),
-            sum(when(col("disp") === "fetch", 1L).otherwise(0L)).as("fetch")))
+        val waveLog = waveLogBase.observe(obs,
+          count(lit(1)).as("cand"),
+          sum(when(col("disp") === "seen", 1L).otherwise(0L)).as("seen"),
+          sum(when(col("disp") === "blocked", 1L).otherwise(0L)).as("blocked"),
+          sum(when(col("disp") === "deferred", 1L).otherwise(0L)).as("deferred"),
+          sum(when(col("disp") === "fetch", 1L).otherwise(0L)).as("fetch"))
           .cache()
 
-        val eagerCounts: Option[Map[String, Long]] =
-          if (deferCounts) None
-          else Some(phase("rank+count", System.nanoTime()) {
-            val m = waveLog.groupBy("disp").count().collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
-            m + ("cand" -> m.values.sum)
-          })
+        // ---- fetch (J5): wave ⋈ bucketed pages — pages NEVER shuffle
+        val fetchSlice = waveLog.filter(col("disp") === "fetch")
+          .select((frontierCols :+ "host_rank").map(col): _*)
+        val okParsed = joinWaveBucketed(fetchSlice, pages)
+          .withColumn("status", lit("ok"))
+          .withColumn("p", parsePageUdf(col("html")))
+          .drop("html")
+          .cache()
+
+        // materialize the parse ONCE: count() builds the okParsed cache
+        // (the parse UDF runs here — the dominant, thread-scaling phase)
+        // and yields nOk for the error-recovery short-circuit in the same
+        // action; every commit below reads the cache. The same job also
+        // delivers the disposition tallies (obs).
+        val nOk = phase("parse", System.nanoTime()) { okParsed.count() }
+        val counts = obs.get
+        def tally(k: String): Long = counts.get(k) match {
+          case Some(x: java.lang.Number) => x.longValue()
+          case _ => 0L
+        }
+        val nCandidates = tally("cand")
+        val nSeen = tally("seen")
+        val nBlocked = tally("blocked")
+        val nDeferred = tally("deferred")
+        val nFetch = tally("fetch")
         // an empty READ set with skipped rows would be a planner bug (the
         // prune rule always keeps each host's best dir)
-        if (eagerCounts.exists(_("cand") == 0L)) {
+        if (nCandidates == 0) {
           require(fplan.skippedRows == 0,
             "frontier planner bug: zero candidates read but rows skipped")
-          done = true; waveLog.unpersist()
+          done = true; okParsed.unpersist(); waveLog.unpersist()
         }
         else {
-          // ---- fetch (J5): wave ⋈ pages in the broadcast-legal inner shape
-          // (joinWavePages) — pages NEVER shuffle on the broadcast path.
-          val fetchSlice = waveLog.filter(col("disp") === "fetch")
-            .select((frontierCols :+ "host_rank").map(col): _*)
-          val useBroadcast = cfg.pagesTable.isEmpty &&
-            eagerCounts.exists(_.getOrElse("fetch", 0L) <= cfg.broadcastWaveLimit)
-          val joined0 =
-            if (cfg.pagesTable.isDefined) joinWaveBucketed(fetchSlice, pages)
-            else joinWavePages(fetchSlice, pages, useBroadcast)
-          // broadcast-join output inherits the pages scan's partitions —
-          // spread the parse ONLY when the scan genuinely under-splits
-          // (small staged corpora): when the scan already fans out ≥ the
-          // core count, this repartition would shuffle every html byte of
-          // the wave for nothing (measured: the dominant non-scaling cost
-          // per wave at bench scale)
-          val joined = if (useBroadcast && pagesScanParts < spark.sparkContext.defaultParallelism)
-            joined0.repartition(spark.sparkContext.defaultParallelism) else joined0
-          val okParsed = joined
-            .withColumn("status", lit("ok"))
-            .withColumn("p", parsePageUdf(col("html")))
-            .drop("html")
-            .cache()
 
-          // materialize the parse ONCE: count() builds the okParsed cache
-          // (the parse UDF runs here — the dominant, thread-scaling phase)
-          // and yields nOk for the error-recovery short-circuit in the same
-          // action; every commit below reads the cache. In the deferred mode
-          // this job ALSO delivers the disposition tallies (obs).
-          val nOk = phase("parse", System.nanoTime()) { okParsed.count() }
-          val counts: Map[String, Long] = eagerCounts.getOrElse {
-            val m = obs.get
-            def l(k: String): Long = m.get(k) match {
-              case Some(x: Long) => x
-              case Some(x: java.lang.Number) => x.longValue()
-              case _ => 0L
-            }
-            Map("cand" -> l("cand"), "seen" -> l("seen"),
-              "blocked" -> l("blocked"), "deferred" -> l("deferred"),
-              "fetch" -> l("fetch"))
-          }
-          val nCandidates = counts("cand")
-          val nSeen = counts.getOrElse("seen", 0L)
-          val nBlocked = counts.getOrElse("blocked", 0L)
-          val nDeferred = counts.getOrElse("deferred", 0L)
-          val nFetch = counts.getOrElse("fetch", 0L)
-          if (nCandidates == 0) {
-            require(fplan.skippedRows == 0,
-              "frontier planner bug: zero candidates read but rows skipped")
-            done = true; okParsed.unpersist(); waveLog.unpersist()
-          }
-          else {
+        // status='error' recovery: wave rows with no page, or whose page
+        // had NULL html (P6). Short-circuit: when every wave row parsed
+        // (the common case — requires the pages table's url-uniqueness
+        // contract, see Config.pagesTable), skip the anti-join entirely.
+        val errRows = (if (nOk == nFetch)
+          fetchSlice.limit(0)
+        else errorRows(fetchSlice, okParsed.select(col("url"))))
+          .withColumn("status", lit("error"))
 
-          // status='error' recovery: wave rows with no page, or whose page
-          // had NULL html (P6). Short-circuit: when every wave row parsed
-          // (the common case — requires the pages table's url-uniqueness
-          // contract, see Config.pagesTable), skip the anti-join entirely —
-          // its build side is another wave-sized broadcast per wave.
-          val errRows = (if (nOk == nFetch)
-            fetchSlice.limit(0)
-          else errorRows(fetchSlice, okParsed.select(col("url")), useBroadcast))
-            .withColumn("status", lit("error"))
+        // ---- fetchlog rows: ordering trace + seen log + lineage source ----
+        val attemptCols = Seq(col("url"), col("url_hash"), col("host"),
+          col("host_rank"), col("status"), col("depth"),
+          col("seed_subject"), col("seed_year"),
+          spark_partition_id().as("partition_id"))
+        val logRows = okParsed.select(attemptCols: _*)
+          .unionByName(errRows.select(attemptCols: _*))
+          .unionByName(spark.range(1).select( // per-wave summary row
+            lit("").as("url"), lit(null).cast("long").as("url_hash"),
+            lit("").as("host"), lit(0).as("host_rank"),
+            lit("summary").as("status"), lit(0).as("depth"),
+            lit("").as("seed_subject"), lit(0).as("seed_year"),
+            lit(-1).as("partition_id")))
+          .withColumn("wave", lit(wave))
+          // skipped cold rows ARE this wave's candidates-that-deferred in
+          // the always-read engine: patching both counts from the exact
+          // sidecar totals keeps lineage row-for-row identical to it
+          .withColumn("candidates_in_wave", lit(nCandidates + fplan.skippedRows))
+          .withColumn("deduped_in_wave", lit(nSeen))
+          .withColumn("blocked_in_wave", lit(nBlocked))
+          .withColumn("deferred_in_wave", lit(nDeferred + fplan.skippedRows))
 
-          // ---- fetchlog rows: ordering trace + seen log + lineage source ----
-          val attemptCols = Seq(col("url"), col("url_hash"), col("host"),
-            col("host_rank"), col("status"), col("depth"),
-            col("seed_subject"), col("seed_year"),
-            spark_partition_id().as("partition_id"))
-          val logRows = okParsed.select(attemptCols: _*)
-            .unionByName(errRows.select(attemptCols: _*))
-            .unionByName(spark.range(1).select( // per-wave summary row
-              lit("").as("url"), lit(null).cast("long").as("url_hash"),
-              lit("").as("host"), lit(0).as("host_rank"),
-              lit("summary").as("status"), lit(0).as("depth"),
-              lit("").as("seed_subject"), lit(0).as("seed_year"),
-              lit(-1).as("partition_id")))
-            .withColumn("wave", lit(wave))
-            // skipped cold rows ARE this wave's candidates-that-deferred in
-            // the always-read engine: patching both counts from the exact
-            // sidecar totals keeps lineage row-for-row identical to it
-            .withColumn("candidates_in_wave", lit(nCandidates + fplan.skippedRows))
-            .withColumn("deduped_in_wave", lit(nSeen))
-            .withColumn("blocked_in_wave", lit(nBlocked))
-            .withColumn("deferred_in_wave", lit(nDeferred + fplan.skippedRows))
-
-          // ---- state commits, CONCURRENT (VERDICT r02 #3): questions,
-          // fetchlog, bloom, cuckoo are independent jobs over cached inputs
-          // (okParsed / waveLog), writing to disjoint tables. Submitting them
-          // from separate driver threads overlaps their fixed per-job cost
-          // (driver planning + scheduling + manifest commit) — the measured
-          // ~7 s/wave serial floor was exactly these back-to-back small jobs.
-          // The frontier advance stays a BARRIER after all of them: resume
-          // correctness requires every state commit of wave N to land before
-          // the frontier moves to N+1 (see the resume note above).
-          import scala.concurrent.{Await, Future}
-          val commits = Seq[() => Unit](
-            () => if (cfg.parseQuestions) phase("questions", System.nanoTime()) {
-              questionsT.commit(okParsed
-                .select(col("url"), col("seed_subject"), col("seed_year"),
-                  posexplode_outer(col("p.questions")).as(Seq("pos", "q")))
-                .filter(col("q").isNotNull)
-                .select(col("url"), col("seed_subject"), col("seed_year"), col("pos"),
-                  col("q.section"), col("q.qtype"), col("q.number"), col("q.question"),
-                  col("q.options"), col("q.subparts"), col("q.diagrams"),
-                  col("q.answer"), col("q.solution"),
-                  col("q.answer_after_solution")),
-                wave)
-            },
-            () => phase("fetchlog", System.nanoTime()) {
-              fetchlogT.commit(logRows, wave)
-            },
-            // bloom insert (attempted urls — Scrapy marks on request):
-            // distributed build — executors fold per-partition filters, the
-            // agg merges them; the driver receives only the fixed-size
-            // sketch blob, never row data.
-            () => phase("bloom", System.nanoTime()) {
-              if (nFetch > 0) { // stat.bloomFilter NPEs on empty input
-                if (bloom.saturated) bloom.inserted += nFetch // bits dead; count stays monotone
-                else {
-                  // cap the partial-filter fan-in: each partial is a
-                  // full-size bit array (~5 MB at bloomExpected=2^22) —
-                  // per-partition alloc+merge ANTI-scales without the cap;
-                  // ~1M inserts per partial keeps the build parallel exactly
-                  // when the wave is big enough to need it.
-                  val parts = math.max(1L, math.min(16L, nFetch / 1000000L)).toInt
-                  val waveFilter = fetchSlice.select("url_hash").coalesce(parts)
-                    .stat.bloomFilter("url_hash", cfg.bloomExpected, cfg.bloomFpp)
-                  bloom.merge(waveFilter, nFetch)
-                }
+        // ---- state commits, CONCURRENT (VERDICT r02 #3): questions,
+        // fetchlog, bloom, cuckoo are independent jobs over cached inputs
+        // (okParsed / waveLog), writing to disjoint tables. Submitting them
+        // from separate driver threads overlaps their fixed per-job cost
+        // (driver planning + scheduling + manifest commit) — the measured
+        // ~7 s/wave serial floor was exactly these back-to-back small jobs.
+        // The frontier advance stays a BARRIER after all of them: resume
+        // correctness requires every state commit of wave N to land before
+        // the frontier moves to N+1 (see the resume note above).
+        import scala.concurrent.{Await, Future}
+        val commits = Seq[() => Unit](
+          () => if (cfg.parseQuestions) phase("questions", System.nanoTime()) {
+            questionsT.commit(okParsed
+              .select(col("url"), col("seed_subject"), col("seed_year"),
+                posexplode_outer(col("p.questions")).as(Seq("pos", "q")))
+              .filter(col("q").isNotNull)
+              .select(col("url"), col("seed_subject"), col("seed_year"), col("pos"),
+                col("q.section"), col("q.qtype"), col("q.number"), col("q.question"),
+                col("q.options"), col("q.subparts"), col("q.diagrams"),
+                col("q.answer"), col("q.solution"),
+                col("q.answer_after_solution")),
+              wave)
+          },
+          () => phase("fetchlog", System.nanoTime()) {
+            fetchlogT.commit(logRows, wave)
+          },
+          // bloom insert (attempted urls — Scrapy marks on request):
+          // distributed build — executors fold per-partition filters, the
+          // agg merges them; the driver receives only the fixed-size
+          // sketch blob, never row data.
+          () => phase("bloom", System.nanoTime()) {
+            if (nFetch > 0) { // stat.bloomFilter NPEs on empty input
+              if (bloom.saturated) bloom.inserted += nFetch // bits dead; count stays monotone
+              else {
+                // cap the partial-filter fan-in: each partial is a
+                // full-size bit array (~5 MB at bloomExpected=2^22) —
+                // per-partition alloc+merge ANTI-scales without the cap;
+                // ~1M inserts per partial keeps the build parallel exactly
+                // when the wave is big enough to need it.
+                val parts = math.max(1L, math.min(16L, nFetch / 1000000L)).toInt
+                val waveFilter = fetchSlice.select("url_hash").coalesce(parts)
+                  .stat.bloomFilter("url_hash", cfg.bloomExpected, BloomFpp)
+                bloom.merge(waveFilter, nFetch)
               }
-              bloom.save(spark, s"$storeRoot/bloom", wave)
+            }
+            bloom.save(spark, s"$storeRoot/bloom", wave)
+          },
+          () => if (cfg.strategy == SeenSet.BloomCuckoo ||
+                     cfg.strategy == SeenSet.BloomShardExact)
+            phase("cuckoo", System.nanoTime()) {
+              SeenSet.cuckooInsert(spark, fetchSlice.select("url_hash").as[Long],
+                cuckooT, cfg.cuckooShards, cfg.cuckooPerShardCapacity, wave,
+                pruneBytes = cfg.cuckooPruneBytes,
+                exactBase = cfg.strategy == SeenSet.BloomShardExact)
+            })
+        // ---- next frontier: deferred ∪ discovered links (S4), LSM ----
+        val discovered = okParsed
+          .filter(col("p.next").isNotNull)
+          .withColumn("durl", resolveHref(col("url"), col("p.next")))
+          .select(
+            col("durl").as("url"),
+            xxhash64(col("durl")).as("url_hash"),
+            regexp_extract(col("durl"), "https?://([^/]+)/", 1).as("host"),
+            (col("depth") + 1).as("priority"),
+            (col("depth") + 1).as("depth"),
+            col("warc_ts").as("discovery_ts"),
+            col("seed_subject"), col("seed_year"))
+        // duplicate probe: a discovery may duplicate a row in a SKIPPED
+        // cold dir — bloom-hit dirs are read NOW and folded through the
+        // same min-tuple dedup (their unmatched rows are rewritten too),
+        // keeping the frontier duplicate-free without reading the cold
+        // tail. No skipped dirs (the bench/default path) → no job at all.
+        val hitDirs: Seq[String] =
+          if (fplan.skippedDirs.isEmpty) Nil
+          else Frontier.dupHitDirs(spark,
+            discovered.select(col("host"), col("url_hash")),
+            fplan.skippedDirs, fbloomsT, cfg.frontierShards,
+            cfg.frontierDupBroadcastBytes,
+            // discoveries ≤ parsed pages (one next link each): nOk bounds
+            // the map-side collect without an extra count job
+            waveRowBound = nOk, discBroadcastRows = cfg.frontierDupDiscRows)
+        val survived0 = waveLog.filter(col("disp") === "deferred")
+          .select(frontierCols.map(col): _*)
+        val survived = if (hitDirs.isEmpty) survived0
+          else survived0.unionByName(
+            spark.read.parquet(hitDirs: _*).select(frontierCols.map(col): _*))
+        // sidecars only once the frontier is big enough that pruning can
+        // ever engage; their absence just forces dirs to be read (sound).
+        // The same gate turns on ts-slicing: finer dirs pay off only when
+        // the planner can skip them (deterministic on replay — the gate
+        // reads the same pre-wave manifest the planner does).
+        val sidecarOn = liveDirs.flatMap(_._2).sum >= cfg.frontierPruneBytes / 2
+        val sliceCol =
+          if (!sidecarOn || cfg.frontierTsSlices <= 1) lit(0)
+          else pmod(floor(unix_timestamp(col("discovery_ts"))
+            / cfg.frontierTsSliceSecs), lit(cfg.frontierTsSlices)).cast("int")
+        val deduped = survived.withColumn("is_surv", lit(1))
+          .unionByName(discovered.withColumn("is_surv", lit(0)))
+          .groupBy("url", "url_hash") // in-batch dedup: deterministic min tuple
+          .agg(min(struct(col("priority"), col("depth"), col("discovery_ts"),
+            col("seed_subject"), col("seed_year"))).as("m"),
+            first(col("host")).as("host"),
+            max(col("is_surv")).as("vetted"))
+          .select(col("url"), col("url_hash"), col("host"), col("m.priority"),
+            col("m.depth"), col("m.discovery_ts"), col("m.seed_subject"),
+            col("m.seed_year"), col("vetted"))
+        // geometric rank tier (Config.frontierRankChunks): exact per-host
+        // rank over the full politeness key — strictly monotone (url
+        // tiebreak), so chunk k's keys sort strictly below chunk k+1's
+        // for every host and the stats planner prunes tail tiers unaided.
+        // The robots join reuses the disposition's budget formula so tier
+        // widths track each host's drain rate. Same byte gate as slicing.
+        // Ranks via Frontier.rankChunks' range-partitioned exact rank —
+        // NOT Window.partitionBy(host), which would sort a mega-host's
+        // whole read-back backlog in one task (e.g. a compaction wave
+        // folding its tail tier).
+        val (chunked, chunkCleanup) =
+          if (!sidecarOn || cfg.frontierRankChunks <= 1)
+            (deduped.withColumn("chunk", lit(0)), () => ())
+          else Frontier.rankChunks(deduped, robots, cfg.waveDurationMs,
+            FrontierChunkWaves, cfg.frontierRankChunks)
+        val nextFrontier = chunked
+          // VETTED rows (probed this wave: open, host allowed — incl. a
+          // merged rediscovery, whose url was just probed via its
+          // surviving copy) go to cold dirs keyed
+          // ((band·S + tsSlice)·C + chunk)·F + hostBucket; unvetted
+          // discoveries go to the fresh dir, always read next wave so
+          // seen-duplicates are consumed at first probe
+          .withColumn("fshard", when(col("vetted") === 1,
+            (((least(col("priority"), lit(FrontierBands - 1))
+              * cfg.frontierTsSlices + sliceCol)
+              * cfg.frontierRankChunks + col("chunk"))
+              * cfg.frontierShards
+              + pmod(xxhash64(col("host")), lit(cfg.frontierShards)))
+              .cast("int"))
+            .otherwise(lit(Frontier.FreshShard)))
+          .drop("chunk")
+        val nf = if (sidecarOn) nextFrontier.cache() else nextFrontier
+        // commit unconditionally — no emptiness-probe count() job: an empty
+        // frontier just makes the next iteration's candidate count 0, which
+        // ends the loop (one cheap empty pass instead of a per-wave job).
+        // The frontier's data WRITE runs concurrently with the state
+        // commits above (it's invisible until published); only its
+        // manifest PUBLISH — the actual wave advance, a millisecond
+        // rename — waits for the barrier, preserving the resume invariant.
+        // Cold dirs persist sorted by the priority key (priority-queue
+        // layout, north star): the ranked scan reads runs in order and
+        // parquet prunes better. Global order stays defined by the
+        // politeness rank, not file layout (digest-invariant).
+        // NO repartition by fshard here: the dedup groupBy already hash-
+        // spreads rows across tasks, and partitionBy splits each task's
+        // rows into its shard dirs. An fshard repartition would funnel a
+        // big fresh wave (every discovery has fshard=-1) into ONE task.
+        val frontierStage = Future(phase("frontier-stage", System.nanoTime()) {
+          frontierT.stageSharded(nf
+            .sortWithinPartitions("fshard", "priority", "depth",
+              "discovery_ts", "url")
+            .select((frontierCols :+ "fshard").map(col): _*),
+            "fshard", wave + 1)
+        })(commitEc)
+        val preLivePairs: Set[Long] = liveDirs.map(_._1)
+          .filter(p => SnapshotTable.shardIdOf(p).exists(_ >= 0))
+          .map(p => Frontier.dirKey(SnapshotTable.waveOf(p).get,
+            SnapshotTable.shardIdOf(p).get)).toSet
+        val sidecarCommits: Seq[() => Unit] = if (!sidecarOn) Nil else {
+          val vetted = nf.filter(col("fshard") =!= Frontier.FreshShard)
+          Seq(
+            () => phase("frontier-stats", System.nanoTime()) {
+              fstatsT.commit(Frontier.statsFor(vetted, wave + 1), wave + 1)
+              Frontier.compactSidecar(fstatsT, preLivePairs, wave + 1,
+                cfg.frontierSidecarFoldDirs)
             },
-            () => if (cfg.strategy == SeenSet.BloomCuckoo ||
-                       cfg.strategy == SeenSet.BloomShardExact)
-              phase("cuckoo", System.nanoTime()) {
-                SeenSet.cuckooInsert(spark, fetchSlice.select("url_hash").as[Long],
-                  cuckooT, cfg.cuckooShards, cfg.cuckooPerShardCapacity, wave,
-                  pruneBytes = cfg.cuckooPruneBytes,
-                  compactThreshold = cfg.cuckooCompactThreshold,
-                  exactBase = cfg.strategy == SeenSet.BloomShardExact)
-              })
-          // ---- next frontier: deferred ∪ discovered links (S4), LSM ----
-          val discovered = okParsed
-            .filter(col("p.next").isNotNull)
-            .withColumn("durl", resolveHref(col("url"), col("p.next")))
-            .select(
-              col("durl").as("url"),
-              xxhash64(col("durl")).as("url_hash"),
-              regexp_extract(col("durl"), "https?://([^/]+)/", 1).as("host"),
-              (col("depth") + 1).as("priority"),
-              (col("depth") + 1).as("depth"),
-              col("warc_ts").as("discovery_ts"),
-              col("seed_subject"), col("seed_year"))
-          // duplicate probe: a discovery may duplicate a row in a SKIPPED
-          // cold dir — bloom-hit dirs are read NOW and folded through the
-          // same min-tuple dedup (their unmatched rows are rewritten too),
-          // keeping the frontier duplicate-free without reading the cold
-          // tail. No skipped dirs (the bench/default path) → no job at all.
-          val hitDirs: Seq[String] =
-            if (fplan.skippedDirs.isEmpty) Nil
-            else Frontier.dupHitDirs(spark,
-              discovered.select(col("host"), col("url_hash")),
-              fplan.skippedDirs, fbloomsT, cfg.frontierShards,
-              cfg.frontierDupBroadcastBytes,
-              // discoveries ≤ parsed pages (one next link each): nOk bounds
-              // the map-side collect without an extra count job
-              waveRowBound = nOk, discBroadcastRows = cfg.frontierDupDiscRows)
-          val survived0 = waveLog.filter(col("disp") === "deferred")
-            .select(frontierCols.map(col): _*)
-          val survived = if (hitDirs.isEmpty) survived0
-            else survived0.unionByName(
-              spark.read.parquet(hitDirs: _*).select(frontierCols.map(col): _*))
-          // sidecars only once the frontier is big enough that pruning can
-          // ever engage; their absence just forces dirs to be read (sound).
-          // The same gate turns on ts-slicing: finer dirs pay off only when
-          // the planner can skip them (deterministic on replay — the gate
-          // reads the same pre-wave manifest the planner does).
-          val sidecarOn = liveDirs.flatMap(_._2).sum >= cfg.frontierPruneBytes / 2
-          val sliceCol =
-            if (!sidecarOn || cfg.frontierTsSlices <= 1) lit(0)
-            else pmod(floor(unix_timestamp(col("discovery_ts"))
-              / cfg.frontierTsSliceSecs), lit(cfg.frontierTsSlices)).cast("int")
-          val deduped = survived.withColumn("is_surv", lit(1))
-            .unionByName(discovered.withColumn("is_surv", lit(0)))
-            .groupBy("url", "url_hash") // in-batch dedup: deterministic min tuple
-            .agg(min(struct(col("priority"), col("depth"), col("discovery_ts"),
-              col("seed_subject"), col("seed_year"))).as("m"),
-              first(col("host")).as("host"),
-              max(col("is_surv")).as("vetted"))
-            .select(col("url"), col("url_hash"), col("host"), col("m.priority"),
-              col("m.depth"), col("m.discovery_ts"), col("m.seed_subject"),
-              col("m.seed_year"), col("vetted"))
-          // geometric rank tier (Config.frontierRankChunks): exact per-host
-          // rank over the full politeness key — strictly monotone (url
-          // tiebreak), so chunk k's keys sort strictly below chunk k+1's
-          // for every host and the stats planner prunes tail tiers unaided.
-          // The robots join reuses the disposition's budget formula so tier
-          // widths track each host's drain rate. Same byte gate as slicing.
-          // Ranks via Frontier.rankChunks' range-partitioned exact rank —
-          // NOT Window.partitionBy(host), which would sort a mega-host's
-          // whole read-back backlog in one task (e.g. a compaction wave
-          // folding its tail tier).
-          val (chunked, chunkCleanup) =
-            if (!sidecarOn || cfg.frontierRankChunks <= 1)
-              (deduped.withColumn("chunk", lit(0)), () => ())
-            else Frontier.rankChunks(deduped, robots, cfg.waveDurationMs,
-              cfg.frontierChunkWaves, cfg.frontierRankChunks)
-          val nextFrontier = chunked
-            // VETTED rows (probed this wave: open, host allowed — incl. a
-            // merged rediscovery, whose url was just probed via its
-            // surviving copy) go to cold dirs keyed
-            // ((band·S + tsSlice)·C + chunk)·F + hostBucket; unvetted
-            // discoveries go to the fresh dir, always read next wave so
-            // seen-duplicates are consumed at first probe
-            .withColumn("fshard", when(col("vetted") === 1,
-              (((least(col("priority"), lit(cfg.frontierBands - 1))
-                * cfg.frontierTsSlices + sliceCol)
-                * cfg.frontierRankChunks + col("chunk"))
-                * cfg.frontierShards
-                + pmod(xxhash64(col("host")), lit(cfg.frontierShards)))
-                .cast("int"))
-              .otherwise(lit(Frontier.FreshShard)))
-            .drop("chunk")
-          val nf = if (sidecarOn) nextFrontier.cache() else nextFrontier
-          // commit unconditionally — no emptiness-probe count() job: an empty
-          // frontier just makes the next iteration's candidate count 0, which
-          // ends the loop (one cheap empty pass instead of a per-wave job).
-          // The frontier's data WRITE runs concurrently with the state
-          // commits above (it's invisible until published); only its
-          // manifest PUBLISH — the actual wave advance, a millisecond
-          // rename — waits for the barrier, preserving the resume invariant.
-          // Cold dirs persist sorted by the priority key (priority-queue
-          // layout, north star): the ranked scan reads runs in order and
-          // parquet prunes better. Global order stays defined by the
-          // politeness rank, not file layout (digest-invariant).
-          // NO repartition by fshard here: the dedup groupBy already hash-
-          // spreads rows across tasks, and partitionBy splits each task's
-          // rows into its shard dirs. An fshard repartition would funnel a
-          // big fresh wave (every discovery has fshard=-1) into ONE task.
-          val frontierStage = Future(phase("frontier-stage", System.nanoTime()) {
-            frontierT.stageSharded(nf
-              .sortWithinPartitions("fshard", "priority", "depth",
-                "discovery_ts", "url")
-              .select((frontierCols :+ "fshard").map(col): _*),
-              "fshard", wave + 1)
-          })(commitEc)
-          val preLivePairs: Set[Long] = liveDirs.map(_._1)
-            .filter(p => SnapshotTable.shardIdOf(p).exists(_ >= 0))
-            .map(p => Frontier.dirKey(SnapshotTable.waveOf(p).get,
-              SnapshotTable.shardIdOf(p).get)).toSet
-          val sidecarCommits: Seq[() => Unit] = if (!sidecarOn) Nil else {
-            val vetted = nf.filter(col("fshard") =!= Frontier.FreshShard)
-            Seq(
-              () => phase("frontier-stats", System.nanoTime()) {
-                fstatsT.commit(Frontier.statsFor(vetted, wave + 1), wave + 1)
-                Frontier.compactSidecar(fstatsT, preLivePairs, wave + 1,
-                  cfg.frontierSidecarFoldDirs)
-              },
-              () => phase("frontier-blooms", System.nanoTime()) {
-                fbloomsT.commit(Frontier.bloomsFor(spark, vetted, wave + 1), wave + 1)
-                Frontier.compactSidecar(fbloomsT, preLivePairs, wave + 1,
-                  cfg.frontierSidecarFoldDirs)
-              })
-          }
-          val running = (commits ++ sidecarCommits).map(f => Future(f())(commitEc))
-          // settle EVERY commit job (and the stage write) before propagating
-          // the first failure (ADVICE r03): rethrowing while siblings still
-          // run on the daemon pool races teardown against half-finished
-          // Spark jobs and buries the root cause under secondary errors
-          val settled = phase("commit-span", System.nanoTime()) {
-            (running :+ frontierStage.map(_ => ())(commitEc))
-              .map(fut => scala.util.Try(
-                Await.result(fut, scala.concurrent.duration.Duration.Inf)))
-          }
-          settled.foreach(_.get) // all settled — first failure propagates clean
-          val stagedDirs = Await.result(frontierStage,
-            scala.concurrent.duration.Duration.Inf)
-          // the wave advance: drop exactly what was read (fresh + read cold
-          // + dup-hit dirs — their surviving rows are in the staged dirs),
-          // carry every skipped dir at the manifest level. staged_bytes in
-          // the metadata is the O(touched) evidence a test can assert.
-          phase("publish", System.nanoTime()) {
-          frontierT.publishSharded(stagedDirs, wave + 1,
-            dropDirPaths = fplan.readSet ++ hitDirs,
-            metaKv = Map(
-              "read_dirs" -> fplan.readDirs.size.toString,
-              "skipped_dirs" -> fplan.skippedDirs.size.toString,
-              "skipped_rows" -> fplan.skippedRows.toString,
-              "dup_hit_dirs" -> hitDirs.size.toString,
-              "staged_bytes" -> stagedDirs.flatMap(_._2).sum.toString))
-          }
-          if (sidecarOn) nf.unpersist()
-          chunkCleanup() // releases rankChunks' range-sorted persist
+            () => phase("frontier-blooms", System.nanoTime()) {
+              fbloomsT.commit(Frontier.bloomsFor(spark, vetted, wave + 1), wave + 1)
+              Frontier.compactSidecar(fbloomsT, preLivePairs, wave + 1,
+                cfg.frontierSidecarFoldDirs)
+            })
+        }
+        val running = (commits ++ sidecarCommits).map(f => Future(f())(commitEc))
+        // settle EVERY commit job (and the stage write) before propagating
+        // the first failure (ADVICE r03): rethrowing while siblings still
+        // run on the daemon pool races teardown against half-finished
+        // Spark jobs and buries the root cause under secondary errors
+        val settled = phase("commit-span", System.nanoTime()) {
+          (running :+ frontierStage.map(_ => ())(commitEc))
+            .map(fut => scala.util.Try(
+              Await.result(fut, scala.concurrent.duration.Duration.Inf)))
+        }
+        settled.foreach(_.get) // all settled — first failure propagates clean
+        val stagedDirs = Await.result(frontierStage,
+          scala.concurrent.duration.Duration.Inf)
+        // the wave advance: drop exactly what was read (fresh + read cold
+        // + dup-hit dirs — their surviving rows are in the staged dirs),
+        // carry every skipped dir at the manifest level. staged_bytes in
+        // the metadata is the O(touched) evidence a test can assert.
+        phase("publish", System.nanoTime()) {
+        frontierT.publishSharded(stagedDirs, wave + 1,
+          dropDirPaths = fplan.readSet ++ hitDirs,
+          metaKv = Map(
+            "read_dirs" -> fplan.readDirs.size.toString,
+            "skipped_dirs" -> fplan.skippedDirs.size.toString,
+            "skipped_rows" -> fplan.skippedRows.toString,
+            "dup_hit_dirs" -> hitDirs.size.toString,
+            "staged_bytes" -> stagedDirs.flatMap(_._2).sum.toString))
+        }
+        if (sidecarOn) nf.unpersist()
+        chunkCleanup() // releases rankChunks' range-sorted persist
 
-          okParsed.unpersist(); waveLog.unpersist()
-          if (timing) System.err.println(
-            f"[wave $wave] cand=$nCandidates fetch=$nFetch " +
-              f"sec=${(System.nanoTime() - tw0) / 1e9}%.2f")
-          wave += 1
-          }
+        okParsed.unpersist(); waveLog.unpersist()
+        if (timing) System.err.println(
+          f"[wave $wave] cand=$nCandidates fetch=$nFetch " +
+            f"sec=${(System.nanoTime() - tw0) / 1e9}%.2f")
+        wave += 1
         }
       }
     }
     } finally {
       commitEc.shutdown()
-      ccPrev match {
-        case Some(v) => spark.conf.set(ccKey, v)
-        case None    => spark.conf.unset(ccKey)
+      confPrev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
     }
 

@@ -19,19 +19,6 @@ object Dedup {
 
   private def tokensCol(text: Column): Column = split(lower(text), " ")
 
-  /** Spread an under-split scan across the session's cores (guide §2.5
-    * input skew): a small single-file corpus arrives as ONE scan partition,
-    * which serializes every downstream sketch UDF, band join and pair
-    * verify into a single task. Only fires when the scan genuinely
-    * under-splits (same guard as the engine's parse spread) — at real scale
-    * the scan already fans out and this is a no-op, never a corpus shuffle.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (df.rdd.getNumPartitions < sc.defaultParallelism)
-      df.repartition(sc.defaultParallelism) else df
-  }
-
   /** Identity barrier marked non-deterministic (guide §4.4, applied to a
     * derived column instead of a UDF): a threshold filter on an expensive
     * derived value (set intersection, cosine) is otherwise pushed into the

@@ -25,19 +25,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity.cosineSim(a, b)
 
-  /** Spread an under-split scan across the session's cores (guide §2.5):
-    * a small single-file embeddings table arrives as ONE scan partition,
-    * which would serialize the streaming side of every bucket join — and
-    * with it all the per-pair cosine evaluations — into a single task.
-    * Guarded like the engine's parse spread: a no-op whenever the scan
-    * already fans out (the real-scale case), never a corpus shuffle.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (df.rdd.getNumPartitions < sc.defaultParallelism)
-      df.repartition(sc.defaultParallelism) else df
-  }
-
   /** Interpreted built-ins formulation (aggregate ∘ zip_with) — kept as the
     * semantic cross-check for CosineSimilaritySpec; measurably slower
     * (per-element interpreted lambda steps).
